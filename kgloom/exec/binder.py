@@ -108,7 +108,9 @@ class SparkBinder:
             op = node.operator
             preds = graph.predecessors(node_id)
             if isinstance(op, SourceOp):
-                key = (op.config, op.root_iterator.reference)
+                # the iterator's fields are part of the bound columns,
+                # so maps over one source share it only with equal fields
+                key = (op.config, op.root_iterator)
                 if key not in source_cache:
                     source_cache[key] = self._bind_source(op)
                 bound[node_id] = source_cache[key]

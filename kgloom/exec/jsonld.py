@@ -30,7 +30,9 @@ rendered N-Triples-style strings:
     rdf:type obj   → bare "iri" inside the @type array
 
 N-Triples string escapes (\\" \\\\ \\n \\r \\t \\uXXXX) are a subset of
-JSON string escapes, so the quoted lexical form embeds verbatim.
+JSON string escapes, so the quoted lexical form embeds verbatim once
+the two escapes JSON lacks are rewritten: \\' becomes ', and
+\\UXXXXXXXX becomes \\uXXXX (a surrogate pair above the BMP).
 """
 
 from __future__ import annotations
@@ -48,6 +50,27 @@ def _strip_iri(col: Column) -> Column:
     return F.regexp_extract(col, r"^<(.*)>$", 1)
 
 
+# one token per escape sequence or run of unescaped text
+_ESC_TOKENS = r"(?s)\\U[0-9A-Fa-f]{8}|\\.|[^\\]+"
+
+
+def _json_lex(lex: Column) -> Column:
+    """A quoted N-Triples lexical form as a JSON string literal."""
+    def token(t: Column) -> Column:
+        cp = F.conv(F.substring(t, 3, 8), 16, 10).cast("int")
+        hi, lo = F.shiftright(cp - 0x10000, 10), (cp - 0x10000) % 1024
+        return (F.when(t == "\\'", F.lit("'"))
+                .when((F.length(t) == 10) & t.startswith("\\U"),
+                      F.when(cp < 0x10000, F.format_string("\\u%04X", cp))
+                      .otherwise(F.format_string("\\u%04X\\u%04X",
+                                                 hi + 0xD800, lo + 0xDC00)))
+                .otherwise(t))
+    tokens = F.regexp_extract_all(lex, F.lit(_ESC_TOKENS), 0)
+    return F.when(lex.rlike(r"\\['U]"),
+                  F.array_join(F.transform(tokens, token), "")) \
+        .otherwise(lex)
+
+
 def value_json(o: Column) -> Column:
     """Rendered object term → its deterministic JSON-LD value object
     (see module docstring for the mapping)."""
@@ -62,11 +85,11 @@ def value_json(o: Column) -> Column:
               F.concat(F.lit('{"@id":"'), o, F.lit('"}')))
         .when(dt != "",
               F.concat(F.lit('{"@type":"'), dt, F.lit('","@value":'),
-                       dtlex, F.lit("}")))
+                       _json_lex(dtlex), F.lit("}")))
         .when(lang != "",
               F.concat(F.lit('{"@language":"'), lang,
-                       F.lit('","@value":'), langlex, F.lit("}")))
-        .otherwise(F.concat(F.lit('{"@value":'), o, F.lit("}"))))
+                       F.lit('","@value":'), _json_lex(langlex), F.lit("}")))
+        .otherwise(F.concat(F.lit('{"@value":'), _json_lex(o), F.lit("}"))))
 
 
 def jsonld_nodes(df: DataFrame) -> DataFrame:

@@ -37,6 +37,10 @@ via ``foreachBatch``:
   ``n_changed`` — how many alias rows this batch added or re-pointed —
   the per-batch lineage record for merge auditing.
 
+State: ``raw/batch={id}`` and ``map/v={id}`` in :mod:`.state`.  Version
+k is visible once both are complete, and the view then reads the
+complete raw batches ≤ k.
+
 The reference names streaming targets as enum values only
 (IOType::Kafka/Websocket, operator/src/lib.rs:362-370); this realizes
 the incremental-materialization semantics those targets would need.
@@ -44,7 +48,6 @@ the incremental-materialization semantics those targets would need.
 
 from __future__ import annotations
 
-import glob
 import os
 from typing import Optional
 
@@ -52,9 +55,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..ops.reasoning import OWL_SAMEAS, rewrite_canonical
+from . import state
 
 TRIPLE_DDL = "subj string, pred string, obj string"
 _MAP_DDL = "node string, canonical string"
+_TABLES = ("raw/batch", "map/v")
 
 
 def read_triple_stream(spark: SparkSession, input_path: str,
@@ -66,35 +71,13 @@ def read_triple_stream(spark: SparkSession, input_path: str,
             .parquet(input_path))
 
 
-def _map_versions(state_path: str, before: Optional[int] = None) -> list:
-    """Complete map versions (ascending).  Listing uses the local
-    filesystem (the sandbox's state store); for DFS-resident state the
-    one change needed is swapping this listing to the Hadoop
-    FileSystem API — the layout itself is filesystem-agnostic."""
-    versions = []
-    for d in glob.glob(os.path.join(state_path, "map", "v=*")):
-        try:
-            v = int(os.path.basename(d).split("=", 1)[1])
-        except ValueError:
-            continue
-        # only versions whose write finished (parquet _SUCCESS marker):
-        # a batch that died mid-map-write leaves no marker and is
-        # recomputed from the last complete version on replay
-        if os.path.exists(os.path.join(d, "_SUCCESS")) and \
-                (before is None or v < before):
-            versions.append(v)
-    return sorted(versions)
-
-
 def read_alias_map(spark: SparkSession, state_path: str,
                    before: Optional[int] = None) -> Optional[DataFrame]:
-    """The newest complete alias-map version (< ``before`` if given),
-    or None when no sameAs edge has been seen yet."""
-    versions = _map_versions(state_path, before)
-    if not versions:
-        return None
-    return spark.read.schema(_MAP_DDL).parquet(
-        os.path.join(state_path, "map", f"v={versions[-1]}"))
+    """The newest visible alias-map version (< ``before`` if given),
+    or None before the first batch."""
+    vs = state.versions(state_path, _TABLES, before)
+    return state.read(spark, state_path, "map/v", _MAP_DDL, vs[-1]) \
+        if vs else None
 
 
 def fold_alias_map(prev_map: Optional[DataFrame],
@@ -124,33 +107,26 @@ def fuse_batch(spark: SparkSession, state_path: str,
     Deterministic in (state up to batch_id-1, batch contents) — safe
     under micro-batch replay."""
     data = batch_df.where(F.col("pred") != same_as_pred)
-    data.write.mode("overwrite").parquet(
-        os.path.join(state_path, "raw", f"batch={batch_id}"))
+    state.write(data, state_path, "raw/batch", batch_id)
 
     batch_edges = (batch_df.where(F.col("pred") == same_as_pred)
                    .select(F.col("subj").alias("src"),
                            F.col("obj").alias("dst"))
                    .where(F.col("src") != F.col("dst")))
     prev = read_alias_map(spark, state_path, before=batch_id)
-    new_map = fold_alias_map(prev, batch_edges)
-    new_map.write.mode("overwrite").parquet(
-        os.path.join(state_path, "map", f"v={batch_id}"))
+    state.write(fold_alias_map(prev, batch_edges), state_path, "map/v",
+                batch_id)
 
     # per-batch lineage metrics; n_changed = alias rows added or
     # re-pointed by this batch (anti-join vs the previous map) — a
     # cross-batch component merge shows up here as exactly the
     # re-canonicalized member set
-    written = spark.read.schema(_MAP_DDL).parquet(
-        os.path.join(state_path, "map", f"v={batch_id}"))
+    written = state.read(spark, state_path, "map/v", _MAP_DDL, batch_id)
     changed = written if prev is None else \
         written.join(prev, ["node", "canonical"], "left_anti")
-    metrics = spark.createDataFrame(
-        [(batch_id, data.count(), batch_edges.count(), written.count(),
-          changed.count())],
-        "batch_id long, n_data long, n_edges long, n_map long, "
-        "n_changed long")
-    metrics.write.mode("overwrite").parquet(
-        os.path.join(state_path, "metrics", f"batch={batch_id}"))
+    state.write_metrics(spark, state_path, batch_id,
+                        n_data=data.count(), n_edges=batch_edges.count(),
+                        n_map=written.count(), n_changed=changed.count())
 
 
 def stream_fused_triples(spark: SparkSession, input_path: str,
@@ -163,31 +139,24 @@ def stream_fused_triples(spark: SparkSession, input_path: str,
     ``read_fused`` (exact: equals batch ``same_as_fusion`` over the
     full input — pinned by ``tests/test_streaming_fusion.py``,
     including components that merge ACROSS batches)."""
-    triples = read_triple_stream(spark, input_path, max_files_per_trigger)
-
-    def _hook(batch_df: DataFrame, batch_id: int) -> None:
-        fuse_batch(spark, state_path, batch_df, batch_id, same_as_pred)
-
-    writer = (triples.writeStream
-              .foreachBatch(_hook)
-              .option("checkpointLocation", checkpoint_path))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return state.start(
+        read_triple_stream(spark, input_path, max_files_per_trigger),
+        lambda df, i: fuse_batch(spark, state_path, df, i, same_as_pred),
+        checkpoint_path, available_now)
 
 
 def read_fused(spark: SparkSession, state_path: str) -> DataFrame:
-    """The fused view: all raw batches rewritten through the latest
-    alias map.  O(data) with two broadcast-sized joins; no history
-    rewrite ever happens at ingest time."""
-    raw = (spark.read.schema(TRIPLE_DDL)
-           .option("basePath", os.path.join(state_path, "raw"))
-           .parquet(os.path.join(state_path, "raw"))
-           .select("subj", "pred", "obj"))
-    mapping = read_alias_map(spark, state_path)
-    if mapping is None:
-        return raw.distinct()
-    return rewrite_canonical(raw, mapping)
+    """The fused view: the complete raw batches up to the newest
+    visible version, rewritten through that version's alias map.
+    O(data) with two broadcast-sized joins; no history rewrite ever
+    happens at ingest time."""
+    vs = state.versions(state_path, _TABLES)
+    if not vs:
+        raise ValueError(f"no complete fusion state under {state_path}")
+    raw = state.read(spark, state_path, "raw/batch", TRIPLE_DDL,
+                     *state.versions(state_path, ["raw/batch"], vs[-1] + 1))
+    return rewrite_canonical(
+        raw, state.read(spark, state_path, "map/v", _MAP_DDL, vs[-1]))
 
 
 def read_fusion_metrics(spark: SparkSession, state_path: str) -> DataFrame:

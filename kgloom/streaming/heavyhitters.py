@@ -24,22 +24,20 @@ verify pass over the summary's candidate set turns the answer exact —
 the same prune-then-verify shape as :func:`kgloom.ops.sketch.
 heavy_hitters`, with the fold replacing the per-partition pass.
 
-State layout mirrors the distinct/quantiles/fusion/validation
-siblings: versioned parquet (``summ/v={batch_id}`` and group totals
-``tot/v={batch_id}``) gated by ``_SUCCESS`` — deterministic in (state
-before batch_id, batch contents), so retry-idempotent under
-Structured Streaming's replay contract.
+State: ``summ/v={batch_id}`` and group totals ``tot/v={batch_id}`` in
+:mod:`.state`, visible only as a pair.  ``heavy_batch`` is deterministic
+in (version before batch_id, batch), so a replay is idempotent.
 """
 
 from __future__ import annotations
 
-import glob
-import os
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
+
+from . import state
 
 
 def _summ_ddl(keys: list[str], value: str) -> str:
@@ -51,18 +49,12 @@ def _tot_ddl(keys: list[str]) -> str:
     return ", ".join(f"{k} string" for k in keys) + ", n_total bigint"
 
 
-def _versions(state_path: str, sub: str,
-              before: Optional[int] = None) -> list:
-    out = []
-    for d in glob.glob(os.path.join(state_path, sub, "v=*")):
-        try:
-            v = int(os.path.basename(d).split("=", 1)[1])
-        except ValueError:
-            continue
-        if os.path.exists(os.path.join(d, "_SUCCESS")) and \
-                (before is None or v < before):
-            out.append(v)
-    return sorted(out)
+def _read(spark: SparkSession, state_path: str, keys: list[str],
+          value: str, before: Optional[int] = None) -> Optional[list]:
+    """[summary, totals] at the newest version complete in both."""
+    return state.read_latest(spark, state_path,
+                             {"summ/v": _summ_ddl(keys, value),
+                              "tot/v": _tot_ddl(keys)}, before)
 
 
 def mg_compress(counters: DataFrame, keys: list[str], value: str,
@@ -101,41 +93,27 @@ def fold_summary(prev: Optional[DataFrame], batch_df: DataFrame,
 def read_summary(spark: SparkSession, state_path: str, keys: list[str],
                  value: str,
                  before: Optional[int] = None) -> Optional[DataFrame]:
-    versions = _versions(state_path, "summ", before)
-    if not versions:
-        return None
-    return spark.read.schema(_summ_ddl(keys, value)).parquet(
-        os.path.join(state_path, "summ", f"v={versions[-1]}"))
-
-
-def _read_totals(spark: SparkSession, state_path: str, keys: list[str],
-                 before: Optional[int] = None) -> Optional[DataFrame]:
-    versions = _versions(state_path, "tot", before)
-    if not versions:
-        return None
-    return spark.read.schema(_tot_ddl(keys)).parquet(
-        os.path.join(state_path, "tot", f"v={versions[-1]}"))
+    got = _read(spark, state_path, keys, value, before)
+    return got[0] if got else None
 
 
 def heavy_batch(spark: SparkSession, state_path: str,
                 batch_df: DataFrame, batch_id: int, keys: list[str],
                 value: str, m: int = 64) -> None:
     """Fold one micro-batch into the summary + totals state."""
-    prev = read_summary(spark, state_path, keys, value, before=batch_id)
+    prev, ptot = _read(spark, state_path, keys, value,
+                       before=batch_id) or (None, None)
     new = fold_summary(prev, batch_df, keys, value, m=m)
-    new.write.mode("overwrite").parquet(
-        os.path.join(state_path, "summ", f"v={batch_id}"))
+    state.write(new, state_path, "summ/v", batch_id)
     # null values never enter the summary, so they are excluded from
     # the totals too — keeps the err bound tight and the guarantee
     # threshold (> n_total/(m+1)) consistent with what was inserted
     tot = (batch_df.where(F.col(value).isNotNull())
            .groupBy(*keys).agg(F.count(F.lit(1)).alias("n_total")))
-    ptot = _read_totals(spark, state_path, keys, before=batch_id)
     if ptot is not None:
         tot = (tot.unionByName(ptot).groupBy(*keys)
                .agg(F.sum("n_total").alias("n_total")))
-    tot.write.mode("overwrite").parquet(
-        os.path.join(state_path, "tot", f"v={batch_id}"))
+    state.write(tot, state_path, "tot/v", batch_id)
 
 
 def stream_mg_heavy(spark: SparkSession, stream_df: DataFrame,
@@ -144,16 +122,10 @@ def stream_mg_heavy(spark: SparkSession, stream_df: DataFrame,
                     available_now: bool = True):
     """Fold a streaming DataFrame into MG heavy-hitter state; read the
     current counters + error bounds any time with :func:`read_heavy`."""
-    def _hook(batch_df: DataFrame, batch_id: int) -> None:
-        heavy_batch(spark, state_path, batch_df, batch_id, keys,
-                    value, m=m)
-
-    writer = (stream_df.writeStream
-              .foreachBatch(_hook)
-              .option("checkpointLocation", checkpoint_path))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return state.start(
+        stream_df, lambda df, i: heavy_batch(spark, state_path, df, i,
+                                             keys, value, m=m),
+        checkpoint_path, available_now)
 
 
 def read_heavy(spark: SparkSession, state_path: str, keys: list[str],
@@ -162,10 +134,10 @@ def read_heavy(spark: SparkSession, state_path: str, keys: list[str],
     cnt, n_total, err)`` where ``cnt ≤ true ≤ cnt + err`` and every
     value with true count > n_total/(m+1) is guaranteed present.
     O(m·groups) — never touches history."""
-    summ = read_summary(spark, state_path, keys, value)
-    if summ is None:
+    got = _read(spark, state_path, keys, value)
+    if got is None:
         raise ValueError(f"no complete summary state under {state_path}")
-    tot = _read_totals(spark, state_path, keys)
+    summ, tot = got
     kept = summ.groupBy(*keys).agg(F.sum("cnt").alias("__kept"))
     return (summ.join(tot, on=list(keys))
             .join(kept, on=list(keys))

@@ -30,6 +30,7 @@ from pyspark.sql.types import (
 )
 
 from ..transcripts.mentions import MENTION_PATTERN, normalize_surface
+from . import state
 
 TRANSCRIPT_SCHEMA = StructType([
     StructField("conv_id", StringType()),
@@ -266,13 +267,9 @@ def stream_closed_triples(spark: SparkSession, input_path: str,
         # foreachBatch exactly-once pattern.  Readers see the batch id
         # as a discovered partition column (per-batch lineage); select
         # subj/pred/obj + distinct for the closure itself.
-        (rdfs_closure(batch_df, schema=ontology, include_schema=False)
-         .write.mode("overwrite")
-         .parquet(f"{output_path}/batch={batch_id}"))
+        state.write(rdfs_closure(batch_df, schema=ontology,
+                                 include_schema=False),
+                    output_path, "batch", batch_id)
 
-    writer = (triples.writeStream
-              .foreachBatch(_close_batch)
-              .option("checkpointLocation", checkpoint_path))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return state.start(triples, _close_batch, checkpoint_path,
+                       available_now)

@@ -23,29 +23,26 @@ top value the MG winner with its lower bound + error — the honest
 streaming substitute for the batch profile's exact verify pass, which
 would need a history rescan.
 
-State layout mirrors the sibling monitors: versioned parquet
-(``cnt/ minima/ summ/ tot/`` under ``v={batch_id}``), ``_SUCCESS``-
-gated, deterministic in (prior state, batch) → retry-idempotent under
-Structured Streaming's replay contract.
+State: ``cnt/ minima/ summ/ tot/`` under ``v={batch_id}`` in
+:mod:`.state`, visible only as a set of four.  ``profile_batch`` is
+deterministic in (version before batch_id, batch), so a replay is
+idempotent.
 """
 
 from __future__ import annotations
-
-import glob
-import os
-from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from . import state
 from .distinct import fold_minima
 from .heavyhitters import fold_summary
 
-_CNT_DDL = "c string, n_rows bigint, n_nulls bigint"
-_MIN_DDL = "c string, __f double"
-_SUMM_DDL = "c string, v string, cnt bigint"
-_TOT_DDL = "c string, n_total bigint"
+_DDLS = {"cnt/v": "c string, n_rows bigint, n_nulls bigint",
+         "minima/v": "c string, __f double",
+         "summ/v": "c string, v string, cnt bigint",
+         "tot/v": "c string, n_total bigint"}
 
 
 def _melt(batch_df: DataFrame, cols: list[str]) -> DataFrame:
@@ -56,63 +53,33 @@ def _melt(batch_df: DataFrame, cols: list[str]) -> DataFrame:
     return batch_df.select(pairs).select("p.c", "p.v")
 
 
-def _versions(state_path: str, sub: str,
-              before: Optional[int] = None) -> list:
-    out = []
-    for d in glob.glob(os.path.join(state_path, sub, "v=*")):
-        try:
-            v = int(os.path.basename(d).split("=", 1)[1])
-        except ValueError:
-            continue
-        if os.path.exists(os.path.join(d, "_SUCCESS")) and \
-                (before is None or v < before):
-            out.append(v)
-    return sorted(out)
-
-
-def _read(spark: SparkSession, state_path: str, sub: str, ddl: str,
-          before: Optional[int] = None) -> Optional[DataFrame]:
-    versions = _versions(state_path, sub, before)
-    if not versions:
-        return None
-    return spark.read.schema(ddl).parquet(
-        os.path.join(state_path, sub, f"v={versions[-1]}"))
-
-
 def profile_batch(spark: SparkSession, state_path: str,
                   batch_df: DataFrame, batch_id: int, cols: list[str],
                   k: int = 64, m: int = 64) -> None:
     """Fold one micro-batch into all four state tables."""
     melted = _melt(batch_df, cols).localCheckpoint()
     nn = melted.where(F.col("v").isNotNull())
+    pcnt, pmin, psum, ptot = state.read_latest(
+        spark, state_path, _DDLS, before=batch_id) or (None,) * 4
 
     cnt = melted.groupBy("c").agg(
         F.count(F.lit(1)).alias("n_rows"),
         F.sum(F.when(F.col("v").isNull(), 1).otherwise(0))
          .alias("n_nulls"))
-    pcnt = _read(spark, state_path, "cnt", _CNT_DDL, before=batch_id)
     if pcnt is not None:
         cnt = (cnt.unionByName(pcnt).groupBy("c")
                .agg(F.sum("n_rows").alias("n_rows"),
                     F.sum("n_nulls").alias("n_nulls")))
-    cnt.write.mode("overwrite").parquet(
-        os.path.join(state_path, "cnt", f"v={batch_id}"))
-
-    pmin = _read(spark, state_path, "minima", _MIN_DDL, before=batch_id)
-    fold_minima(pmin, nn, ["c"], "v", k=k).write.mode("overwrite") \
-        .parquet(os.path.join(state_path, "minima", f"v={batch_id}"))
-
-    psum = _read(spark, state_path, "summ", _SUMM_DDL, before=batch_id)
-    fold_summary(psum, nn, ["c"], "v", m=m).write.mode("overwrite") \
-        .parquet(os.path.join(state_path, "summ", f"v={batch_id}"))
-
+    state.write(cnt, state_path, "cnt/v", batch_id)
+    state.write(fold_minima(pmin, nn, ["c"], "v", k=k), state_path,
+                "minima/v", batch_id)
+    state.write(fold_summary(psum, nn, ["c"], "v", m=m), state_path,
+                "summ/v", batch_id)
     tot = nn.groupBy("c").agg(F.count(F.lit(1)).alias("n_total"))
-    ptot = _read(spark, state_path, "tot", _TOT_DDL, before=batch_id)
     if ptot is not None:
         tot = (tot.unionByName(ptot).groupBy("c")
                .agg(F.sum("n_total").alias("n_total")))
-    tot.write.mode("overwrite").parquet(
-        os.path.join(state_path, "tot", f"v={batch_id}"))
+    state.write(tot, state_path, "tot/v", batch_id)
 
 
 def stream_profile(spark: SparkSession, stream_df: DataFrame,
@@ -121,28 +88,20 @@ def stream_profile(spark: SparkSession, stream_df: DataFrame,
                    available_now: bool = True):
     """Fold a streaming DataFrame into profile state; read the current
     statistics any time with :func:`read_profile`."""
-    def _hook(batch_df: DataFrame, batch_id: int) -> None:
-        profile_batch(spark, state_path, batch_df, batch_id, cols,
-                      k=k, m=m)
-
-    writer = (stream_df.writeStream
-              .foreachBatch(_hook)
-              .option("checkpointLocation", checkpoint_path))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return state.start(
+        stream_df, lambda df, i: profile_batch(spark, state_path, df, i,
+                                               cols, k=k, m=m),
+        checkpoint_path, available_now)
 
 
 def read_profile(spark: SparkSession, state_path: str, k: int = 64,
                  m: int = 64) -> DataFrame:
     """Current per-column statistics off the latest state —
     O(k·columns + m·columns), never touches history."""
-    cnt = _read(spark, state_path, "cnt", _CNT_DDL)
-    if cnt is None:
+    got = state.read_latest(spark, state_path, _DDLS)
+    if got is None:
         raise ValueError(f"no complete profile state under {state_path}")
-    minima = _read(spark, state_path, "minima", _MIN_DDL)
-    summ = _read(spark, state_path, "summ", _SUMM_DDL)
-    tot = _read(spark, state_path, "tot", _TOT_DDL)
+    cnt, minima, summ, tot = got
 
     agg = minima.groupBy("c").agg(
         F.count(F.lit(1)).alias("n_minima"), F.max("__f").alias("f_k"))

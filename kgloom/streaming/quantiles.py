@@ -13,12 +13,9 @@ what makes a quantile monitor viable on an unbounded 10^12-turn
 stream: a per-group p99 of (say) turn length is always one
 ``read_quantiles`` away, no history rescan.
 
-State layout mirrors fusion.py: versioned parquet directories
-(``cent/v={batch_id}``) whose ``_SUCCESS`` marker gates visibility, so
-a batch that dies mid-write is recomputed from the last complete
-version on replay — ``sketch_batch`` is deterministic in
-(state up to batch_id-1, batch contents) and therefore retry-
-idempotent under Structured Streaming's replay contract.
+State: ``cent/v={batch_id}`` in :mod:`.state`.  ``sketch_batch`` is
+deterministic in (version before batch_id, batch), so a replay is
+idempotent.
 
 Accuracy: each fold is one more :func:`kll_merge` compaction, so the
 rank error grows with the number of folds in the worst case but stays
@@ -28,14 +25,13 @@ bound is pinned in ``tests/test_streaming.py``.
 
 from __future__ import annotations
 
-import glob
-import os
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F  # noqa: F401  (parity with siblings)
+from pyspark.sql import functions as F
 
 from ..ops.sketch import kll_extract, kll_merge, kll_sketch
+from . import state
 
 _CENT_DDL_SUFFIX = "bucket int, cnt bigint, vsum bigint, " \
     "lo bigint, hi bigint, avg double"
@@ -45,28 +41,13 @@ def _cent_ddl(keys: list[str]) -> str:
     return ", ".join(f"{k} string" for k in keys) + ", " + _CENT_DDL_SUFFIX
 
 
-def _versions(state_path: str, before: Optional[int] = None) -> list:
-    versions = []
-    for d in glob.glob(os.path.join(state_path, "cent", "v=*")):
-        try:
-            v = int(os.path.basename(d).split("=", 1)[1])
-        except ValueError:
-            continue
-        if os.path.exists(os.path.join(d, "_SUCCESS")) and \
-                (before is None or v < before):
-            versions.append(v)
-    return sorted(versions)
-
-
 def read_centroids(spark: SparkSession, state_path: str, keys: list[str],
                    before: Optional[int] = None) -> Optional[DataFrame]:
     """The newest complete centroid version (< ``before`` if given),
     or None before the first batch."""
-    versions = _versions(state_path, before)
-    if not versions:
-        return None
-    return spark.read.schema(_cent_ddl(keys)).parquet(
-        os.path.join(state_path, "cent", f"v={versions[-1]}"))
+    got = state.read_latest(spark, state_path,
+                            {"cent/v": _cent_ddl(keys)}, before)
+    return got[0] if got else None
 
 
 def sketch_batch(spark: SparkSession, state_path: str,
@@ -81,17 +62,14 @@ def sketch_batch(spark: SparkSession, state_path: str,
     if prev is not None:
         bag = bag.unionByName(prev.select(*keys, "cnt", "vsum", "lo", "hi"))
     new_cent = kll_merge(bag, keys, k=k)
-    new_cent.write.mode("overwrite").parquet(
-        os.path.join(state_path, "cent", f"v={batch_id}"))
-    # per-batch lineage metrics, fusion.py-style
-    written = spark.read.schema(_cent_ddl(keys)).parquet(
-        os.path.join(state_path, "cent", f"v={batch_id}"))
+    state.write(new_cent, state_path, "cent/v", batch_id)
+    written = state.read(spark, state_path, "cent/v", _cent_ddl(keys),
+                         batch_id)
     n_total = written.agg(F.sum("cnt")).collect()[0][0] or 0
-    metrics = spark.createDataFrame(
-        [(batch_id, batch_df.count(), written.count(), int(n_total))],
-        "batch_id long, n_rows long, n_centroids long, n_total long")
-    metrics.write.mode("overwrite").parquet(
-        os.path.join(state_path, "metrics", f"batch={batch_id}"))
+    state.write_metrics(spark, state_path, batch_id,
+                        n_rows=batch_df.count(),
+                        n_centroids=written.count(),
+                        n_total=int(n_total))
 
 
 def stream_kll(spark: SparkSession, stream_df: DataFrame, state_path: str,
@@ -99,16 +77,11 @@ def stream_kll(spark: SparkSession, stream_df: DataFrame, state_path: str,
                k: int = 64, n_salts: int = 8, available_now: bool = True):
     """Fold a streaming DataFrame into incremental quantile state;
     read results any time with :func:`read_quantiles`."""
-    def _hook(batch_df: DataFrame, batch_id: int) -> None:
-        sketch_batch(spark, state_path, batch_df, batch_id, keys, value,
-                     k=k, n_salts=n_salts)
-
-    writer = (stream_df.writeStream
-              .foreachBatch(_hook)
-              .option("checkpointLocation", checkpoint_path))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return state.start(
+        stream_df, lambda df, i: sketch_batch(spark, state_path, df, i,
+                                              keys, value, k=k,
+                                              n_salts=n_salts),
+        checkpoint_path, available_now)
 
 
 def read_quantiles(spark: SparkSession, state_path: str, keys: list[str],

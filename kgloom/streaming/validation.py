@@ -26,17 +26,13 @@ cardinality constraints (minCount needs exact per-focus counts).
 The report itself is computed at READ time, not per trigger — the
 fusion module's read-time-rewrite discipline.
 
-State layout mirrors fusion/quantiles: versioned parquet
-(``slice/v={batch_id}``) gated by ``_SUCCESS``, so a batch that dies
-mid-write replays from the last complete version — ``validate_batch``
-is deterministic in (state before batch_id, batch contents) and
-therefore retry-idempotent under Structured Streaming's replay
-contract.
+State: ``slice/v={batch_id}`` in :mod:`.state`.  ``validate_batch`` is
+deterministic in (version before batch_id, batch), so a replay is
+idempotent.
 """
 
 from __future__ import annotations
 
-import glob
 import os
 from typing import Optional, Sequence
 
@@ -44,6 +40,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..ops.reasoning import RDF_TYPE, NodeShape, shacl_validate
+from . import state
 
 TRIPLE_DDL = "subj string, pred string, obj string"
 
@@ -70,28 +67,13 @@ def relevant_slice(triples: DataFrame,
     return triples.where(cond).select("subj", "pred", "obj")
 
 
-def _versions(state_path: str, before: Optional[int] = None) -> list:
-    out = []
-    for d in glob.glob(os.path.join(state_path, "slice", "v=*")):
-        try:
-            v = int(os.path.basename(d).split("=", 1)[1])
-        except ValueError:
-            continue
-        if os.path.exists(os.path.join(d, "_SUCCESS")) and \
-                (before is None or v < before):
-            out.append(v)
-    return sorted(out)
-
-
 def read_state(spark: SparkSession, state_path: str,
                before: Optional[int] = None) -> Optional[DataFrame]:
     """The newest complete slice version (< ``before`` if given), or
     None before the first batch."""
-    versions = _versions(state_path, before)
-    if not versions:
-        return None
-    return spark.read.schema(TRIPLE_DDL).parquet(
-        os.path.join(state_path, "slice", f"v={versions[-1]}"))
+    got = state.read_latest(spark, state_path, {"slice/v": TRIPLE_DDL},
+                            before)
+    return got[0] if got else None
 
 
 def validate_batch(spark: SparkSession, state_path: str,
@@ -103,16 +85,11 @@ def validate_batch(spark: SparkSession, state_path: str,
     prev = read_state(spark, state_path, before=batch_id)
     if prev is not None:
         sl = sl.unionByName(prev)
-    new_state = sl.distinct()
-    new_state.write.mode("overwrite").parquet(
-        os.path.join(state_path, "slice", f"v={batch_id}"))
-    written = spark.read.schema(TRIPLE_DDL).parquet(
-        os.path.join(state_path, "slice", f"v={batch_id}"))
-    metrics = spark.createDataFrame(
-        [(batch_id, batch_df.count(), written.count())],
-        "batch_id long, n_batch_rows long, n_state_rows long")
-    metrics.write.mode("overwrite").parquet(
-        os.path.join(state_path, "metrics", f"batch={batch_id}"))
+    state.write(sl.distinct(), state_path, "slice/v", batch_id)
+    written = state.read(spark, state_path, "slice/v", TRIPLE_DDL, batch_id)
+    state.write_metrics(spark, state_path, batch_id,
+                        n_batch_rows=batch_df.count(),
+                        n_state_rows=written.count())
 
 
 def stream_shacl(spark: SparkSession, stream_df: DataFrame,
@@ -122,16 +99,10 @@ def stream_shacl(spark: SparkSession, stream_df: DataFrame,
     """Fold a streaming triple DataFrame into validation state; read
     the current report any time with :func:`read_report`."""
     shapes = tuple(shapes)
-
-    def _hook(batch_df: DataFrame, batch_id: int) -> None:
-        validate_batch(spark, state_path, batch_df, batch_id, shapes)
-
-    writer = (stream_df.writeStream
-              .foreachBatch(_hook)
-              .option("checkpointLocation", checkpoint_path))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return state.start(
+        stream_df, lambda df, i: validate_batch(spark, state_path, df, i,
+                                                shapes),
+        checkpoint_path, available_now)
 
 
 def read_report(spark: SparkSession, state_path: str,

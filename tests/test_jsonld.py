@@ -102,3 +102,20 @@ def test_document_lines_and_determinism(spark):
                jsonld_document_lines(df.repartition(7)).collect())
     assert a == b
     assert len(a) == 2  # one line per subject
+
+
+def test_ntriples_only_escapes_become_json(spark):
+    r"""``\'`` and ``\UXXXXXXXX`` are N-Triples escapes JSON lacks; an
+    escaped backslash before them stays a backslash."""
+    lex = "it\\'s \\U0001F600 \\U000000E9 \\\\U0001F600 \\\\'"
+    want = "it's \U0001F600 é \\U0001F600 \\'"
+    rows = [("<http://ex.org/s>", "<http://ex.org/plain>", f'"{lex}"'),
+            ("<http://ex.org/s>", "<http://ex.org/lang>", f'"{lex}"@en'),
+            ("<http://ex.org/s>", "<http://ex.org/typed>",
+             f'"{lex}"^^<http://ex.org/T>')]
+    df = spark.createDataFrame(rows, ["subj", "pred", "obj"])
+    lines = [r.jsonld for r in jsonld_nodes(df).collect()]
+    node = json.loads(lines[0])
+    assert len(lines) == 1
+    for p in ("plain", "lang", "typed"):
+        assert node[f"http://ex.org/{p}"][0]["@value"] == want, p

@@ -40,6 +40,37 @@ def test_json_logical_source(spark, tmp_path):
             '"Palm Beach" .' in lines)
 
 
+def test_two_maps_over_one_json_source_with_disjoint_fields(spark,
+                                                           tmp_path):
+    """Two TriplesMaps over the same JSON file and iterator, each
+    referencing its own fields, bind one source each: a shared bound
+    source would lack the second map's fields."""
+    (tmp_path / "people.json").write_text(
+        '{"people": [{"ID": "1", "Name": "Venus", "Town": "Miami"},'
+        ' {"ID": "2", "Name": "Serena", "Town": "Palm Beach"}]}')
+    source = """rml:logicalSource [ rml:source "people.json";
+                      rml:referenceFormulation ql:JSONPath;
+                      rml:iterator "$.people[*]" ];"""
+    ttl = RML_PREAMBLE + f"""
+<Names> a rr:TriplesMap;
+  {source}
+  rr:subjectMap [ rr:template "http://ex.com/{{ID}}" ];
+  rr:predicateObjectMap [ rr:predicate foaf:name;
+                          rr:objectMap [ rml:reference "Name" ] ] .
+<Towns> a rr:TriplesMap;
+  {source}
+  rr:subjectMap [ rr:template "http://ex.com/town/{{Town}}" ];
+  rr:predicateObjectMap [ rr:predicate foaf:based_near;
+                          rr:objectMap [ rml:reference "Town" ] ] .
+"""
+    lines = set(nquads(run_rml(spark, ttl, base_dir=str(tmp_path))))
+    assert '<http://ex.com/2> <http://xmlns.com/foaf/0.1/name> "Serena" .' \
+        in lines
+    assert ('<http://ex.com/town/Miami> <http://xmlns.com/foaf/0.1/'
+            'based_near> "Miami" .') in lines
+    assert len(lines) == 4
+
+
 def test_xml_logical_source(spark, tmp_path):
     (tmp_path / "students.xml").write_text(
         "<students><student id='7'><Name>Coco</Name></student>"

@@ -62,6 +62,9 @@ def test_stream_session_state(spark, tmp_path, turn_files):
     q = (sessions.writeStream.format("memory").queryName("sessions")
          .outputMode("update").trigger(availableNow=True).start())
     q.awaitTermination(120)
+    # the idle-timeout state keeps the query running after its data is
+    # processed; stop it so it does not load every later test
+    q.stop()
     got = spark.sql(
         "SELECT conv_id, max(n_turns) AS n FROM sessions GROUP BY conv_id")
     truth = spark.read.parquet(inp).groupBy("conv_id").count()
@@ -472,3 +475,95 @@ def test_stream_profile_stats(spark, tmp_path):
     a = sorted(map(tuple, read_profile(spark, state, k=K, m=8).collect()))
     b = sorted(map(tuple, read_profile(spark, state2, k=K, m=8).collect()))
     assert a == b
+
+
+def _fold_cases():
+    """fold name → (fold(spark, state, df, batch_id), reader(spark,
+    state), batch DDL, two tiny batches, the last table the fold
+    writes).  Each second batch changes what the reader returns."""
+    from kgloom.ops.reasoning import NodeShape, PropertyShape
+    from kgloom.streaming import distinct, fusion, heavyhitters, \
+        neardedup, profile, quantiles, validation
+    tri = "subj string, pred string, obj string"
+    gv = [[("a", "x"), ("a", "x"), ("a", "y"), ("b", "z")],
+          [("a", "y"), ("a", "y"), ("a", "w"), ("b", "u")]]
+    shapes = (NodeShape(name="S", target_class="<C>", properties=(
+        PropertyShape(path="<p>", min_count=1),)),)
+    rdf_type = "<http://www.w3.org/1999/02/22-rdf-syntax-ns#type>"
+    same = "<http://www.w3.org/2002/07/owl#sameAs>"
+    return {
+        "distinct": (
+            lambda s, p, df, i: distinct.distinct_batch(
+                s, p, df, i, ["g"], "v", k=4),
+            lambda s, p: distinct.read_distinct(s, p, ["g"], k=4),
+            "g string, v string", gv, "minima/v"),
+        "quantiles": (
+            lambda s, p, df, i: quantiles.sketch_batch(
+                s, p, df, i, ["g"], "v", k=4, n_salts=2),
+            lambda s, p: quantiles.read_quantiles(s, p, ["g"], [0.5]),
+            "g string, v long",
+            [[("a", 1), ("a", 2), ("b", 5)], [("a", 9), ("a", 9)]],
+            "cent/v"),
+        "validation": (
+            lambda s, p, df, i: validation.validate_batch(
+                s, p, df, i, shapes),
+            lambda s, p: validation.read_report(s, p, shapes), tri,
+            [[("<a>", rdf_type, "<C>")], [("<a>", "<p>", '"v"')]],
+            "slice/v"),
+        "heavyhitters": (
+            lambda s, p, df, i: heavyhitters.heavy_batch(
+                s, p, df, i, ["g"], "v", m=2),
+            lambda s, p: heavyhitters.read_heavy(s, p, ["g"], "v", m=2),
+            "g string, v string", gv, "tot/v"),
+        "profile": (
+            lambda s, p, df, i: profile.profile_batch(
+                s, p, df, i, ["g", "v"], k=4, m=2),
+            lambda s, p: profile.read_profile(s, p, k=4, m=2),
+            "g string, v string", gv, "tot/v"),
+        "fusion": (
+            lambda s, p, df, i: fusion.fuse_batch(s, p, df, i),
+            fusion.read_fused, tri,
+            [[("<a>", same, "<b>"), ("<b>", "<p>", "<c>")],
+             [("<c>", "<p>", '"x"'), ("<c>", same, "<a>")]],
+            "map/v"),
+        "neardedup": (
+            lambda s, p, df, i: neardedup.dedup_batch(s, p, df, i),
+            neardedup.read_flags, "doc_id string, text string",
+            [[("d1", "the quick brown fox jumps")],
+             [("d2", "the quick brown fox jumps"), ("d3", "other words")]],
+            "bands/batch"),
+    }
+
+
+@pytest.mark.parametrize("name", ["distinct", "quantiles", "validation",
+                                  "heavyhitters", "profile", "fusion",
+                                  "neardedup"])
+def test_fold_replay_and_incomplete_version(spark, tmp_path, name):
+    """Every streaming fold, on the shared state store: a version whose
+    last table lacks ``_SUCCESS`` is invisible, so the reader answers
+    from the previous version and never pairs tables of two versions;
+    refolding that batch restores the answer exactly."""
+    import os
+
+    fold, reader, ddl, batches, last = _fold_cases()[name]
+    state = str(tmp_path / "st")
+
+    def read():
+        return sorted(map(tuple, reader(spark, state).collect()), key=repr)
+
+    fold(spark, state, spark.createDataFrame(batches[0], ddl), 0)
+    after0 = read()
+    fold(spark, state, spark.createDataFrame(batches[1], ddl), 1)
+    after1 = read()
+    assert after1 != after0
+    # a crash before the last table's commit: batch 1 is invisible
+    os.remove(os.path.join(state, f"{last}=1", "_SUCCESS"))
+    assert read() == after0
+    # its replay rewrites every table of batch 1 to the same answer
+    fold(spark, state, spark.createDataFrame(batches[1], ddl), 1)
+    assert read() == after1
+
+    for v in (0, 1):
+        os.remove(os.path.join(state, f"{last}={v}", "_SUCCESS"))
+    with pytest.raises((ValueError, FileNotFoundError)):
+        reader(spark, state)

@@ -3,6 +3,8 @@ streaming case: components MERGE ACROSS micro-batches, so previously
 ingested triples must re-canonicalize.  Exactness gate: the fused view
 after the stream equals batch ``same_as_fusion`` over the full input."""
 
+import os
+
 from pyspark.sql import functions as F
 
 from kgloom.ops.reasoning import OWL_SAMEAS, same_as_fusion
@@ -75,6 +77,23 @@ def test_fuse_batch_replay_idempotent(spark, tmp_path):
     fuse_batch(spark, state, _df(spark, BATCHES[2]), 2)
     assert _rows(read_fused(spark, state)) == before
     assert _rows(read_alias_map(spark, state)) == m_before
+
+
+def test_read_fused_ignores_incomplete_batches(spark, tmp_path):
+    """A raw batch or a map version without ``_SUCCESS`` hides batch 2
+    whole: the view is the two-batch fused view, not raw data of one
+    version rewritten through the map of another."""
+    state = str(tmp_path / "state")
+    for i, rows in enumerate(BATCHES):
+        fuse_batch(spark, state, _df(spark, rows), i)
+        if i == 1:
+            two = _rows(read_fused(spark, state))
+    assert _rows(read_fused(spark, state)) != two
+    for table in ("raw/batch=2", "map/v=2"):
+        marker = os.path.join(state, table, "_SUCCESS")
+        os.remove(marker)
+        assert _rows(read_fused(spark, state)) == two, table
+        open(marker, "w").close()
 
 
 def test_stream_fused_triples_equals_batch(spark, tmp_path):
